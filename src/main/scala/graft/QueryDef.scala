@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine query: a DataFrame builder over a test-corpus dir, plus an
@@ -31,6 +32,16 @@ object Materialize {
     val m = out.cache()
     m.count()
     inputs.foreach(_.unpersist())
+    m
+  }
+
+  /** As above, and also drop the executor copies of `broadcasts` the
+    * result's plan reads. `unpersist`, not `destroy`: an evicted cached
+    * result recomputes, and the broadcast must still be fetchable then. */
+  def releasing(out: DataFrame, broadcasts: Seq[Broadcast[_]],
+      inputs: org.apache.spark.sql.Dataset[_]*): DataFrame = {
+    val m = releasing(out, inputs: _*)
+    broadcasts.foreach(_.unpersist())
     m
   }
 }

@@ -2805,11 +2805,23 @@ object TradeAnalytics extends QueryModule {
     * anti-joined against the user's positives, scored by the best
     * cosine across the basket, and the top-3 per user keep rank order.
     *
-    * Scale shape: candidate volume is |baskets| × 5 (the neighbor-list
-    * cap), never |users| × |catalog|; the dedup/anti/top-3 steps are
-    * keyed aggregations and a per-user window over ≤ 5·|basket| rows.
+    * Scale shape: each item's neighbour list is capped at 5 (nb5), so
+    * a customer's candidates are ≤ 5·|basket|, never |catalog|. While
+    * nb5 fits the broadcast budget it is collected once into a
+    * [[graft.functions.NeighborTable]] and the per-customer tail —
+    * candidate lookup, max-combine, drop positives, top-3 — is one
+    * `neighbor_top_k` call per cached basket array: no (cust,
+    * neighbor) aggregation, anti join or window. Past the budget the
+    * relational tail (join nb5, group by (cust, neighbor), left_anti,
+    * per-user window) runs; same rows.
     */
-  def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
+  def hardNegatives(spark: SparkSession, dir: String): DataFrame =
+    hardNegatives(spark, dir, DimsumItemBudget)
+
+  /** Budget-parameterized body: a small `itemBudget` forces the
+    * relational routes (no catalog broadcasts, no kernel). */
+  private[graft] def hardNegatives(spark: SparkSession, dir: String,
+      itemBudget: Long): DataFrame = {
     val (posts, b, itemN) = coPurchaseBaskets(spark, dir, wide = true)
     // The Σbsz² relation carries ONLY the pair key (r16: the bare-id
     // kernel — the r11 shape still shipped a constant nsh=0 payload
@@ -2855,7 +2867,7 @@ object TradeAnalytics extends QueryModule {
     // probe review flagged): past the budget every degree/neighbor
     // join degrades to an AQE-planned shuffle join, never a driver OOM
     val nCat = itemN.count()
-    val hinted = nCat <= DimsumItemBudget
+    val hinted = nCat <= itemBudget
     def maybeB(df: DataFrame): DataFrame = if (hinted) broadcast(df) else df
     // in-task symmetrization (r16): at sf0.1 the pair relation is
     // 12.7M nearly-unique rows — persisting it for the unionAll's two
@@ -2879,29 +2891,42 @@ object TradeAnalytics extends QueryModule {
     val nb5 = sym.withColumn("nrk", row_number().over(wItem))
       .filter(col("nrk") <= 5)
       .select(col("item"), col("neighbor"), col("cosine"))
-    // Broadcasting nb5 (≤ 5 rows per catalog item — its own, tighter
-    // budget) keeps b on its cust layout through the whole tail: the
-    // candidate join, the (cust, neighbor) aggregation, the anti join,
-    // and the per-user window then all run exchange-free on hash(cust)
-    // — three full shuffles of the basket relation removed (guide
-    // §2.4). Past the budget the join shuffles as before.
-    val cand = b.join(
-        if (nCat * 5 <= DimsumItemBudget) broadcast(nb5) else nb5,
-        Seq("item"))
-      .groupBy(col("cust"), col("neighbor"))
-      .agg(max(col("cosine")).as("score"))
-    val hard = cand.join(
-      b.select(col("cust"), col("item").as("neighbor")),
-      Seq("cust", "neighbor"), "left_anti")
-    val wUser = Window.partitionBy(col("cust"))
-      .orderBy(col("score").desc, col("neighbor"))
-    Materialize.releasing(
-      hard.withColumn("rank", row_number().over(wUser))
-        .filter(col("rank") <= 3)
-        .select(col("cust").as("user_id"), col("rank"),
-          col("neighbor").as("item"), round(col("score"), 4).as("score"))
-        .orderBy(col("user_id"), col("rank")),
-      posts, itemN)
+    // nb5 has ≤ 5 rows per catalog item — its own, tighter budget.
+    // Kernel route: the lists ship as one broadcast table and the
+    // whole per-customer tail runs in place on the cached posts (cust,
+    // ds): max-combine over the basket's lists, drop the customer's
+    // own items, top-3 by (score desc, neighbor). The positives set IS
+    // ds, so the left_anti needs no second read of the baskets.
+    if (nCat <= itemBudget / 5) {
+      val rows = nb5.collect()
+      val table = spark.sparkContext.broadcast(graft.functions.NeighborTable.build(
+        rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+        rows.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(2))),
+        doubles = true))
+      Materialize.releasing(
+        posts.select(col("cust"), explode(graft.functions.NeighborTopKFunctions
+            .neighborTopK(col("ds"), table, 3, "max")).as("t"))
+          .select(col("cust").as("user_id"), col("t.rank").as("rank"),
+            col("t.item").as("item"), round(col("t.score"), 4).as("score"))
+          .orderBy(col("user_id"), col("rank")),
+        Seq(table), posts, itemN)
+    } else {
+      val cand = b.join(nb5, Seq("item"))
+        .groupBy(col("cust"), col("neighbor"))
+        .agg(max(col("cosine")).as("score"))
+      val hard = cand.join(
+        b.select(col("cust"), col("item").as("neighbor")),
+        Seq("cust", "neighbor"), "left_anti")
+      val wUser = Window.partitionBy(col("cust"))
+        .orderBy(col("score").desc, col("neighbor"))
+      Materialize.releasing(
+        hard.withColumn("rank", row_number().over(wUser))
+          .filter(col("rank") <= 3)
+          .select(col("cust").as("user_id"), col("rank"),
+            col("neighbor").as("item"), round(col("score"), 4).as("score"))
+          .orderBy(col("user_id"), col("rank")),
+        posts, itemN)
+    }
   }
 
   private val hardNegativesSql =
@@ -4676,14 +4701,26 @@ object TradeAnalytics extends QueryModule {
     * item's full neighbor list: untruncated this materialized 60.3M
     * rows at sf0.1 (measured r10 — an 89 s sweep outlier, found by
     * the new Verify timings) and grows superlinearly with corpus
-    * density; truncated it is ≤ |profile| × K. Top-k per customer is
-    * a partitioned window; the held-out split is a per-customer max;
-    * eval denominators ride as broadcast one-row aggregates (no
-    * driver-side counts) — no global sort anywhere.
+    * density; truncated it is ≤ |profile| × K. While the truncated
+    * lists fit the broadcast budget they ship as one
+    * [[graft.functions.NeighborTable]] and each customer's profile set
+    * is scored in one `neighbor_top_k` call (sum-combine, profile items
+    * dropped, top-3 by (score desc, j)) — the |profile| × K expansion
+    * is never materialized, aggregated or windowed. Past the budget the
+    * relational tail (join, explode, (c, j) aggregation, window) runs;
+    * same rows. The held-out split is a per-customer max; eval
+    * denominators ride as broadcast one-row aggregates (no driver-side
+    * counts) — no global sort anywhere.
     */
   val RecsysNeighborK = 20
 
-  def recsysBacktest(spark: SparkSession, dir: String): DataFrame = {
+  def recsysBacktest(spark: SparkSession, dir: String): DataFrame =
+    recsysBacktest(spark, dir, DimsumItemBudget)
+
+  /** Budget-parameterized body: a small `itemBudget` forces the
+    * relational scoring tail. */
+  private[graft] def recsysBacktest(spark: SparkSession, dir: String,
+      itemBudget: Long): DataFrame = {
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
     val wLast = Window.partitionBy(col("o_custkey"))
@@ -4717,12 +4754,16 @@ object TradeAnalytics extends QueryModule {
     val heldOut = tagged.filter(col("rn") === 1)
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("item")).distinct()
-    // catalog bound for the broadcast guard AND the packed-pair guard
-    // below: item ids upper-bound the distinct-item count (the
-    // conservative, collect-free direction); trainItems is persisted,
-    // so the max is a cached column pass
-    val maxItemRow = trainItems.agg(max(col("item"))).collect()(0)
-    val maxItem = if (maxItemRow.isNullAt(0)) -1L else maxItemRow.getLong(0)
+    // One aggregation over the cached train relation feeds both
+    // guards: the packed-pair kernel needs every id in [0, 2³²) (past
+    // it the self-join below is the path), and the neighbor table
+    // holds ≤ K rows per distinct train item — a row-count bound that
+    // holds for any id domain, compared by division (no overflow).
+    val guard = trainItems.agg(min(col("item")), max(col("item")),
+      count_distinct(col("item"))).collect()(0)
+    val packedOk = !guard.isNullAt(0) &&
+      guard.getLong(0) >= 0L && guard.getLong(1) < (1L << 32)
+    val coocFits = guard.getLong(2) <= itemBudget / RecsysNeighborK
     // Half-pair co-occurrence (r17, guide §2.3 — shuffle fewer bytes):
     // the old self-join emitted BOTH directions (item ≠ item), then
     // aggregated 2× the distinct pair mass; w(i,j) = w(j,i) by
@@ -4733,14 +4774,13 @@ object TradeAnalytics extends QueryModule {
     // r17 second pass: the within-order pair set doesn't need a join
     // at all — trainItems is already hash(ok) partitioned, so
     // groupBy(ok).collect_list runs IN PLACE and the packed pair
-    // kernel (q217's single-long (i<j) key, runtime-guarded on
-    // max id < 2³² with the join formulation as the fallback) emits
-    // each order's pairs in-task: the self-join's build+probe over the
-    // whole train relation and the two-long agg key both disappear;
-    // the only exchange left on this path is the pair aggregation's
-    // own (now on a single long). Same pair multiset, same counts.
+    // kernel (q217's single-long (i<j) key) emits each order's pairs
+    // in-task: the self-join's build+probe over the whole train
+    // relation and the two-long agg key both disappear; the only
+    // exchange left on this path is the pair aggregation's own (now
+    // on a single long). Same pair multiset, same counts.
     val coocHalf =
-      if (maxItem < (1L << 32)) {
+      if (packedOk) {
         trainItems
           .groupBy(col("ok")).agg(collect_list(col("item")).as("ds"))
           .select(explode(graft.functions.PairExpandFunctions
@@ -4763,56 +4803,54 @@ object TradeAnalytics extends QueryModule {
     val cooc = coocFull.withColumn("nrk", row_number().over(wNbr))
       .filter(col("nrk") <= RecsysNeighborK).drop("nrk")
     val w = spark.sparkContext.defaultParallelism
-    // One-exchange scoring tail (r17, guide §2.4/§3). The r16 shape
-    // still paid FOUR exchanges after the profile distinct: re-key
-    // profile by item for the cooc join (12 MiB at sf0.1), repartition
-    // the |profile|×K expansion by c (329 MiB), re-exchange the (c, j)
-    // aggregate by (c, j) for the anti join's full-key co-partition
-    // requirement (293 MiB — requireAllClusterKeysForCoPartition), and
-    // re-exchange by c for the top-3 window (44 MiB). Three moves kill
-    // all four:
-    //  - cooc is grouped into per-item neighbor ARRAYS (≤ K rows per
-    //    catalog item — an S9-bounded dimension like q217's nb5) and
-    //    broadcast under the same budget discipline, so the expansion
-    //    runs on profile's own layout;
-    //  - profile's distinct itself runs on hash(c) (hash(c) satisfies
-    //    the (c, item) clustering), making hash(c) the ONE layout the
-    //    whole tail shares;
-    //  - the anti join folds into the (c, j) aggregation as a SEEN
-    //    marker row (each profile item rides its exploded candidate
-    //    array with a null weight): sum(w) ignores the marker, so
-    //    scores are bit-identical, and max(isnull(w)) = "j was in the
-    //    profile" — filter(!seen) IS the left_anti, evaluated in
-    //    place. The (c, j) agg, the filter and the per-customer top-3
-    //    window (WindowGroupLimit) then all run on hash(c) with zero
-    //    further exchanges.
-    // Past the broadcast budget the join degrades to an AQE-planned
-    // shuffle join (never a driver OOM) — the r16 shape, same rows.
-    val coocArr = cooc.groupBy(col("i"))
-      .agg(collect_list(struct(col("j"), col("w"))).as("nbrs"))
-    val coocFits = maxItem >= 0 && maxItem * RecsysNeighborK <= DimsumItemBudget
-    val profileP = trainItems.select(col("c"), col("item"))
+    // The profile stays on hash(c) at the session's parallelism (a
+    // REPARTITION_BY_NUM that AQE does not coalesce): the scoring work
+    // per customer is the expensive part, and a coalesced single task
+    // serializes it. Both routes below run on this one layout.
+    val profileC = trainItems.select(col("c"), col("item"))
       .repartition(w, col("c"))
-      .distinct() // in place: hash(c) satisfies the (c, item) clustering
-    val nbrType = "array<struct<j:bigint,w:bigint>>"
-    val cand = profileP
-      .join(if (coocFits) broadcast(coocArr) else coocArr,
-        col("item") === col("i"), "left")
-      .select(col("c"), explode(concat(
-        coalesce(col("nbrs"), array().cast(nbrType)),
-        array(struct(col("item").as("j"),
-          lit(null).cast("bigint").as("w"))))).as("e"))
-    val scores = cand
-      .select(col("c"), col("e.j").as("j"), col("e.w").as("w"))
-      .groupBy(col("c"), col("j"))
-      .agg(sum(col("w")).as("score"), max(col("w").isNull).as("seen"))
-      .filter(!col("seen")) // = the old left_anti: j never a profile item
-      .drop("seen")
-    val wTop = Window.partitionBy(col("c"))
-      .orderBy(col("score").desc, col("j"))
-    val topk = scores.withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 3)
-      .persist() // ≤3 rows per customer; read by hits and the item count
+    val (topk, tables) = if (coocFits) {
+      // Kernel route: the ≤ K-per-item lists become one broadcast
+      // table, and each customer's distinct profile set (built in
+      // place on hash(c)) is scored by one neighbor_top_k call.
+      val rows = cooc.collect()
+      val table = spark.sparkContext.broadcast(graft.functions.NeighborTable.build(
+        rows.map(_.getLong(0)), rows.map(_.getLong(1)), rows.map(_.getLong(2)),
+        doubles = false))
+      val scored = profileC
+        .groupBy(col("c")).agg(collect_set(col("item")).as("items"))
+        .select(col("c"), explode(graft.functions.NeighborTopKFunctions
+          .neighborTopK(col("items"), table, 3, "sum")).as("t"))
+        .select(col("c"), col("t.item").as("j"), col("t.rank").as("rk"))
+      (scored, Seq(table))
+    } else {
+      // Relational route (over budget): per-item neighbor arrays join
+      // the hash(c) profile as an AQE-planned shuffle join; the anti
+      // join folds into the (c, j) aggregation as a SEEN marker row
+      // (each profile item rides its exploded candidate array with a
+      // null weight): sum(w) ignores the marker, and max(isnull(w)) =
+      // "j was in the profile", so filter(!seen) IS the left_anti. The
+      // aggregation, filter and top-3 window share hash(c).
+      val coocArr = cooc.groupBy(col("i"))
+        .agg(collect_list(struct(col("j"), col("w"))).as("nbrs"))
+      val nbrType = "array<struct<j:bigint,w:bigint>>"
+      val scores = profileC.distinct()
+        .join(coocArr, col("item") === col("i"), "left")
+        .select(col("c"), explode(concat(
+          coalesce(col("nbrs"), array().cast(nbrType)),
+          array(struct(col("item").as("j"),
+            lit(null).cast("bigint").as("w"))))).as("e"))
+        .select(col("c"), col("e.j").as("j"), col("e.w").as("w"))
+        .groupBy(col("c"), col("j"))
+        .agg(sum(col("w")).as("score"), max(col("w").isNull).as("seen"))
+        .filter(!col("seen"))
+      val wTop = Window.partitionBy(col("c"))
+        .orderBy(col("score").desc, col("j"))
+      (scores.withColumn("rk", row_number().over(wTop))
+        .filter(col("rk") <= 3)
+        .select(col("c"), col("j"), col("rk")), Nil)
+    }
+    topk.persist() // ≤3 rows per customer; read by hits and the item count
     val hits = topk.join(heldOut,
         topk("c") === heldOut("c") && col("j") === heldOut("item"))
       .groupBy(topk("c").as("cc"))
@@ -4837,7 +4875,7 @@ object TradeAnalytics extends QueryModule {
           col("n_rec_items").cast("bigint").as("n_rec_items"),
           round(col("n_rec_items").cast("double") / col("n_catalog"), 6)
             .as("coverage")),
-      trainItems, topk)
+      tables, trainItems, topk)
   }
 
   private val recsysBacktestSql =

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * print that never fails (SURVEY §0.1.7), plus the key-uniqueness check
   * the star schema actually needs.
   *
-  * Both checks are single aggregation jobs: uniqueness compares
-  * `count(*)` with `count_distinct(key)` in ONE pass instead of a
-  * groupBy+filter (no second job, no wide shuffle of non-key columns).
+  * Both checks of a table share one aggregation job: uniqueness
+  * compares `count(*)` with `count_distinct(key)` in ONE pass instead
+  * of a groupBy+filter (no wide shuffle of non-key columns), and that
+  * `count(*)` is also the emptiness check.
   */
 object QualityChecks {
 
@@ -23,29 +24,31 @@ object QualityChecks {
   }
 
   /** Surrogate/natural key uniqueness (not nullable, no duplicates). */
-  def keyUnique(df: DataFrame, table: String, keyCols: Seq[String]): QcResult = {
+  def keyUnique(df: DataFrame, table: String, keyCols: Seq[String]): QcResult =
+    tableChecks(df, table, keyCols).last
+
+  /** [[nonEmpty]] and [[keyUnique]] of one table from ONE aggregation:
+    * the uniqueness pass's row count is the emptiness check's count. */
+  def tableChecks(df: DataFrame, table: String, keyCols: Seq[String]): Seq[QcResult] = {
     val key = if (keyCols.size == 1) col(keyCols.head) else struct(keyCols.map(col): _*)
     val row = df.agg(
       count(lit(1)).as("n"),
       count(key).as("n_nonnull"),
       count_distinct(key).as("n_distinct")).head()
     val (n, nonNull, distinct) = (row.getLong(0), row.getLong(1), row.getLong(2))
-    QcResult(table, s"key_unique(${keyCols.mkString(",")})", n,
-      n > 0 && n == nonNull && nonNull == distinct)
+    Seq(
+      QcResult(table, "non_empty", n, n > 0),
+      QcResult(table, s"key_unique(${keyCols.mkString(",")})", n,
+        n > 0 && n == nonNull && nonNull == distinct))
   }
 
-  /** Run the reference's QC battery over the five star-schema outputs. */
+  /** Run the reference's QC battery over the five star-schema outputs:
+    * one aggregation job per table. */
   def checkAll(fact: DataFrame, visa: DataFrame, calendar: DataFrame,
-      country: DataFrame, demographics: DataFrame): Seq[QcResult] = Seq(
-    nonEmpty(fact, "immigration_fact"),
-    keyUnique(fact, "immigration_fact", Seq("record_id")),
-    nonEmpty(visa, "visa_type_dim"),
-    keyUnique(visa, "visa_type_dim", Seq("visa_type_key")),
-    nonEmpty(calendar, "immigration_calendar_dim"),
-    keyUnique(calendar, "immigration_calendar_dim", Seq("id")),
-    nonEmpty(country, "country_dim"),
-    keyUnique(country, "country_dim", Seq("country_code")),
-    nonEmpty(demographics, "usa_demographics_dim"),
-    keyUnique(demographics, "usa_demographics_dim", Seq("id")),
-  )
+      country: DataFrame, demographics: DataFrame): Seq[QcResult] =
+    tableChecks(fact, "immigration_fact", Seq("record_id")) ++
+      tableChecks(visa, "visa_type_dim", Seq("visa_type_key")) ++
+      tableChecks(calendar, "immigration_calendar_dim", Seq("id")) ++
+      tableChecks(country, "country_dim", Seq("country_code")) ++
+      tableChecks(demographics, "usa_demographics_dim", Seq("id"))
 }

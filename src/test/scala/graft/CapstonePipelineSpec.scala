@@ -143,6 +143,15 @@ class CapstonePipelineSpec extends SparkSpec {
     val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
     val results = QualityChecks.checkAll(t.fact, t.visa, t.calendar, t.country, t.demographics)
     assert(results.forall(_.passed), results.filterNot(_.passed).mkString(", "))
+    // the battery's shape: per table, non_empty then key_unique, in
+    // star-schema order, both carrying the table's row count
+    val keys = Seq("immigration_fact" -> "record_id", "visa_type_dim" -> "visa_type_key",
+      "immigration_calendar_dim" -> "id", "country_dim" -> "country_code",
+      "usa_demographics_dim" -> "id")
+    assert(results.map(r => (r.table, r.check)) === keys.flatMap { case (t, k) =>
+      Seq((t, "non_empty"), (t, s"key_unique($k)")) })
+    assert(results.grouped(2).forall(p => p.head.count == p.last.count))
+    assert(results.head.count === t.fact.count())
     // negative case: a frame with a duplicated key must fail
     val dup = t.visa.union(t.visa)
     assert(!QualityChecks.keyUnique(dup, "dup", Seq("visa_type_key")).passed)

@@ -1308,9 +1308,12 @@ class TradeAnalyticsSpec extends SparkSpec {
     assert(again.toSeq === rows.map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq)
   }
 
-  test("q217: hard negatives match a driver-side neighbor-list replay") {
-    val baskets = Tables.lineitem(spark, sfDir)
-      .join(Tables.orders(spark, sfDir)
+  /** Driver-side q217 replay over `dir`: (user, rank) → (item, score),
+    * and each kept customer's positives. */
+  private def hardNegativesReplay(dir: String)
+      : (Map[(Long, Int), (Long, Double)], Map[Long, Set[Long]]) = {
+    val baskets = Tables.lineitem(spark, dir)
+      .join(Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey"), col("l_partkey")).distinct().collect()
@@ -1325,20 +1328,24 @@ class TradeAnalyticsSpec extends SparkSpec {
       for (i <- s.indices; j <- i + 1 until s.size)
         co((s(i), s(j))) = co.getOrElse((s(i), s(j)), 0) + 1
     }
-    def neighbors(q: Long): Seq[(Long, Double)] =
-      co.iterator.flatMap { case ((a, b), c) =>
-        if (a == q) Some((b, c)) else if (b == q) Some((a, c)) else None
-      }.map { case (nb, c) =>
-        (nb, c.toDouble / math.sqrt(itemN(q).toDouble * itemN(nb)))
-      }.toSeq.sortBy { case (nb, cos) => (-cos, nb) }.take(5)
+    val nbrs = co.toSeq.flatMap { case ((a, b), c) => Seq((a, b, c), (b, a, c)) }
+      .groupBy(_._1).map { case (q, g) =>
+        q -> g.map { case (_, nb, c) =>
+          (nb, c.toDouble / math.sqrt(itemN(q).toDouble * itemN(nb)))
+        }.sortBy { case (nb, cos) => (-cos, nb) }.take(5)
+      }
     val expected = byCust.toSeq.sortBy(_._1).flatMap { case (u, items) =>
-      val cand = items.toSeq.flatMap(neighbors)
+      val cand = items.toSeq.flatMap(i => nbrs.getOrElse(i, Nil))
         .groupBy(_._1).map { case (nb, g) => nb -> g.map(_._2).max }
         .filterNot { case (nb, _) => items(nb) }
       cand.toSeq.sortBy { case (nb, sc) => (-sc, nb) }.take(3).zipWithIndex
         .map { case ((nb, sc), r) => (u, r + 1) -> (nb, sc) }
     }.toMap
-    val rows = TradeAnalytics.hardNegatives(spark, sfDir).collect()
+    (expected, byCust)
+  }
+
+  private def assertHardNegatives(rows: Seq[org.apache.spark.sql.Row], dir: String): Unit = {
+    val (expected, byCust) = hardNegativesReplay(dir)
     assert(rows.length === expected.size)
     rows.foreach { r =>
       val key = (r.getAs[Long]("user_id"), r.getAs[Int]("rank"))
@@ -1347,6 +1354,113 @@ class TradeAnalyticsSpec extends SparkSpec {
       assert(math.abs(r.getAs[Double]("score") - sc) <= 5.1e-5)
       // never a positive
       assert(!byCust(key._1)(r.getAs[Long]("item")))
+    }
+  }
+
+  test("q217: hard negatives match a driver-side neighbor-list replay") {
+    assertHardNegatives(TradeAnalytics.hardNegatives(spark, sfDir).collect().toSeq, sfDir)
+  }
+
+  /** Driver-side q302 replay over `dir`: (n_customers, hits_at_1,
+    * hits_at_3, n_rec_items) from leave-last-out, top-K co-occurrence
+    * lists, profile-summed scores and the top-3 of unseen items. */
+  private def recsysReplay(dir: String): (Long, Long, Long, Long) = {
+    val K = TradeAnalytics.RecsysNeighborK
+    val orders = Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")).collect()
+      .map { r =>
+        // timestamp_ntz or timestamp, depending on the reader
+        val t = r.get(2) match {
+          case l: java.time.LocalDateTime => l.toInstant(java.time.ZoneOffset.UTC)
+          case ts: java.sql.Timestamp => ts.toInstant
+        }
+        (r.getLong(0), r.getLong(1), t.getEpochSecond * 1000000L + t.getNano / 1000)
+      }
+    val items = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_partkey")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).map { case (ok, g) => ok -> g.map(_._2).toSet }
+    val byCust = orders.groupBy(_._2).filter(_._2.length >= 2).map { case (c, os) =>
+      c -> os.sortBy { case (ok, _, t) => (-t, -ok) }.map(_._1).toSeq
+    }
+    val train = byCust.values.flatMap(_.tail).map(ok => items.getOrElse(ok, Set.empty[Long]))
+    val w = scala.collection.mutable.Map[(Long, Long), Long]()
+    train.foreach { s =>
+      for (i <- s; j <- s if i != j) w((i, j)) = w.getOrElse((i, j), 0L) + 1
+    }
+    val lists = w.toSeq.groupBy(_._1._1).map { case (i, g) =>
+      i -> g.map { case ((_, j), c) => (j, c) }.sortBy { case (j, c) => (-c, j) }.take(K)
+    }
+    val topk = byCust.map { case (c, os) =>
+      val profile = os.tail.flatMap(ok => items.getOrElse(ok, Set.empty[Long])).toSet
+      val scores = profile.toSeq.flatMap(i => lists.getOrElse(i, Nil))
+        .filterNot { case (j, _) => profile(j) }
+        .groupBy(_._1).map { case (j, g) => j -> g.map(_._2).sum }
+      c -> scores.toSeq.sortBy { case (j, sc) => (-sc, j) }.take(3).map(_._1)
+    }
+    val best = byCust.flatMap { case (c, os) =>
+      val held = items.getOrElse(os.head, Set.empty[Long])
+      Some(topk(c).indexWhere(held)).filter(_ >= 0)
+    }
+    (byCust.size.toLong, best.count(_ == 0).toLong, best.size.toLong,
+      topk.values.flatten.toSet.size.toLong)
+  }
+
+  private def recsysCounts(r: org.apache.spark.sql.Row): (Long, Long, Long, Long) =
+    (r.getAs[Long]("n_customers"), r.getAs[Long]("hits_at_1"),
+      r.getAs[Long]("hits_at_3"), r.getAs[Long]("n_rec_items"))
+
+  test("q302: hit counts and recommended-item count match a driver-side replay") {
+    val r = TradeAnalytics.recsysBacktest(spark, sfDir).head()
+    assert(recsysCounts(r) === recsysReplay(sfDir))
+  }
+
+  /** Whether `df`'s executed plan, cached subtrees included, runs the
+    * neighbor_top_k kernel. */
+  private def runsTopKKernel(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan): Boolean = (p match {
+      case g: GenerateExec => g.generator.toString.contains("neighbor_top_k")
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec => walk(s.relation.cachedPlan)
+      case _ => false
+    }) || p.children.exists(walk)
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("q217/q302: kernel and over-budget relational routes agree on ids < 0 and >= 2^32") {
+    // injective remap of the part keys: a third negative, a third past
+    // 2^33, the rest unchanged — the packed-pair guards must route to
+    // the struct kernels and both scoring routes must neither throw nor
+    // differ
+    val dir = java.nio.file.Files.createTempDirectory("graft-oddids").toString
+    try {
+      Tables.orders(spark, sfDir).write.parquet(s"$dir/orders.parquet")
+      val p = col("l_partkey")
+      Tables.lineitem(spark, sfDir)
+        .withColumn("l_partkey", when(p % 3 === 0, -p)
+          .when(p % 3 === 1, p + (1L << 33)).otherwise(p))
+        .write.parquet(s"$dir/lineitem.parquet")
+      val hnKernel = TradeAnalytics.hardNegatives(spark, dir)
+      val hnRel = TradeAnalytics.hardNegatives(spark, dir, 0L)
+      assert(runsTopKKernel(hnKernel) && !runsTopKKernel(hnRel))
+      val hk = hnKernel.collect().toSeq
+      assert(hk.nonEmpty)
+      assert(hk === hnRel.collect().toSeq)
+      assertHardNegatives(hk, dir)
+      val rsKernel = TradeAnalytics.recsysBacktest(spark, dir)
+      val rsRel = TradeAnalytics.recsysBacktest(spark, dir, 0L)
+      assert(runsTopKKernel(rsKernel) && !runsTopKKernel(rsRel))
+      val rk = rsKernel.collect().toSeq
+      assert(rk === rsRel.collect().toSeq)
+      assert(recsysCounts(rk.head) === recsysReplay(dir))
+      assert(rk.head.getAs[Long]("hits_at_3") > 0)
+    } finally {
+      spark.catalog.clearCache()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
